@@ -319,9 +319,7 @@ def _q_cc_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale-adaptive CC execution (same knob the flagship pipeline passes):
     # under 100k edges the bounded-collect union-find replaces the multi-job
     # distributed loop — output-equality tested in tests/test_components.py
-    assigns = connected_components(
-        edges, algorithm="two_phase", driver_fallback_edges=100_000
-    )
+    assigns = connected_components(edges, driver_fallback_edges=100_000)
     return (
         docs.join(assigns.withColumnRenamed("u", "doc_id"), "doc_id", "left")
         .select("doc_id", F.coalesce("rep", "doc_id").alias("component"))
@@ -1602,9 +1600,7 @@ def _q_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_bands = bands_all.where(h != 0).localCheckpoint(eager=False)
     b_bands = bands_all.where(h == 0).localCheckpoint(eager=False)
     a_assigns = connected_components(
-        build_edges_from_buckets(a_bands),
-        algorithm="hash_to_min",
-        driver_fallback_edges=100_000,
+        build_edges_from_buckets(a_bands), driver_fallback_edges=100_000
     )
     new_assign, old_updates = incremental_assignments(
         b_bands,

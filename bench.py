@@ -382,7 +382,7 @@ def cc_stress_edges(spark, n_nodes: int, star_size: int):
     """Star-chained single component: n_nodes/star_size stars (leaf→hub
     edges) whose hubs form one long chain — a ~10^6-node component whose
     hub-chain diameter (~n_nodes/star_size) is the worst shape for
-    label-diffusion CC. Star contraction must still converge in O(log
+    label-diffusion CC. The CC loop must still converge in O(log
     diameter) rounds or a real 100-TB boilerplate cluster (every page
     sharing one template) would never finish."""
     from pyspark.sql import functions as F
@@ -404,7 +404,7 @@ def cc_stress_edges(spark, n_nodes: int, star_size: int):
 
 
 class RoundCounter:
-    """Checkpoint wrapper that records the per-phase iteration names the CC
+    """Checkpoint wrapper that records the per-round checkpoint names the CC
     loop passes it — the observable for max_loops-margin assertions."""
 
     def __init__(self):
@@ -420,15 +420,12 @@ class RoundCounter:
     def rounds(self) -> dict:
         import re
 
-        def max_idx(pat):
-            idxs = [int(m.group(1)) for n in self.names if (m := re.match(pat, n))]
-            return max(idxs, default=0)
-
-        return {
-            "small_star_rounds": max_idx(r"cc_edges_(\d+)$"),
-            "large_star_steps": sum(1 for n in self.names if n.startswith("cc_large_")),
-            "label_prop_iters": max_idx(r"lp_labels_(\d+)$"),
-        }
+        idxs = [
+            int(m.group(1))
+            for n in self.names
+            if (m := re.fullmatch(r"lp_labels_(\d+)", n))
+        ]
+        return {"label_prop_iters": max(idxs, default=0)}
 
 
 def run_cc_stress(
@@ -436,8 +433,8 @@ def run_cc_stress(
 ) -> dict:
     """End-to-end CC on the star-chained worst case (VERDICT r4 #8): one
     ~n_nodes component, diameter ~n_nodes/star_size. Asserts single-component
-    correctness (every rep == global min 0) and reports the per-phase round
-    counts against max_loops."""
+    correctness (every rep == global min 0) and reports the round count
+    against max_loops."""
     from pyspark.sql import functions as F
 
     from daft_minhash_dedupe_spark.operators.components import connected_components
@@ -447,7 +444,7 @@ def run_cc_stress(
     counter = RoundCounter()
     t0 = time.time()
     assigns = connected_components(
-        edges, algorithm="two_phase", max_loops=max_loops, checkpoint=counter
+        edges, max_loops=max_loops, checkpoint=counter
     ).localCheckpoint(eager=True)
     sec = time.time() - t0
     stats = assigns.agg(

@@ -86,11 +86,10 @@ class DedupeConfig:
     lowercase: bool = False
     nfd_unicode: bool = True
     white_space: bool = True
-    # "hash_to_min": pure min-label diffusion (the CC the north rule names) —
-    # fastest on low-diameter LSH graphs, verified identical partitions vs
-    # union-find on every test graph. "alternating"/"two_phase": the
-    # reference's star-contraction variants (workload/minhash_dedupe.py:149,
-    # :740) — prefer for pathological high-diameter edge sets.
+    # Connected components: the only accepted value is "hash_to_min", the
+    # one loop in operators/components.py — min-label propagation with
+    # pointer jumping, O(log diameter) rounds. It replaces the reference's
+    # star-contraction variants (workload/minhash_dedupe.py:149, :740).
     algorithm: str = "hash_to_min"
     max_loops: int = 100
     # Signature kernel: "arrow" = the reference-parity vectorized pandas/Arrow
@@ -136,6 +135,10 @@ class DedupeConfig:
             )
         self.B = b
         self.R = r
+        if self.algorithm != "hash_to_min":
+            raise ValueError(
+                f"algorithm must be 'hash_to_min' (got {self.algorithm!r})"
+            )
         if self.minhash_kernel not in ("arrow", "jvm", "oph"):
             raise ValueError(
                 "minhash_kernel must be 'arrow', 'jvm' or 'oph' "

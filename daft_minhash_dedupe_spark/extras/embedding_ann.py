@@ -328,7 +328,7 @@ def embedding_dedupe(
     pairs = embedding_near_dup_pairs(
         df, min_cosine, n_bands, rows_per_band, seed, vec_col, id_col
     )
-    assigns = connected_components(pairs, algorithm="hash_to_min")
+    assigns = connected_components(pairs)
     return (
         df.join(assigns.withColumnRenamed("u", id_col), id_col, "left")
         .withColumn("component", F.coalesce("rep", F.col(id_col)))

@@ -71,7 +71,7 @@ def substring_dedupe_components(
     from daft_minhash_dedupe_spark.operators.components import connected_components
 
     edges = substring_dup_pairs(df, text_col, id_col, window_tokens)
-    assigns = connected_components(edges, algorithm="hash_to_min")
+    assigns = connected_components(edges)
     return (
         df.select(id_col)
         .join(assigns.withColumnRenamed("u", id_col), id_col, "left")

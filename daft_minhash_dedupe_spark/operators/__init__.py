@@ -7,16 +7,9 @@ from daft_minhash_dedupe_spark.operators.edges import (
     build_edges,
     build_edges_from_buckets,
     build_pair_edges_from_buckets,
-    canonicalize,
     symmetrize,
 )
-from daft_minhash_dedupe_spark.operators.components import (
-    connected_components,
-    construct_assignments,
-    global_min_label_propagation,
-    large_star,
-    small_star,
-)
+from daft_minhash_dedupe_spark.operators.components import connected_components
 from daft_minhash_dedupe_spark.operators.incremental import (
     incremental_assignments,
     merge_assignment_tables,
@@ -31,13 +24,8 @@ __all__ = [
     "build_edges",
     "build_edges_from_buckets",
     "build_pair_edges_from_buckets",
-    "canonicalize",
     "symmetrize",
     "connected_components",
-    "construct_assignments",
-    "global_min_label_propagation",
-    "large_star",
-    "small_star",
     "incremental_assignments",
     "merge_assignment_tables",
     "merge_results",

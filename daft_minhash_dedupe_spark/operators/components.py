@@ -1,31 +1,36 @@
-"""Iterative DataFrame-based connected components (hash-to-min).
+"""Iterative DataFrame-based connected components: label propagation with
+pointer jumping (Stergiou et al., "Shortcutting Label Propagation for
+Distributed Connected Components", WSDM 2018).
 
-Semantics mirror the reference exactly (behavior contract):
+Output contract (the reference's, workload/minhash_dedupe.py:507-557): one
+``(u, rep)`` row per node that appears in the edge list, self rows included,
+with ``rep`` the MINIMUM node id of u's component — the invariant every
+downstream keep-rule depends on.
 
-- ``large_star`` / ``small_star``: star-contraction rounds
-  (workload/minhash_dedupe.py:279-358);
-- ``construct_assignments``: node → min-neighbor representative with
-  isolated-node self-assignment (:388-421);
-- ``global_min_label_propagation``: min-label diffusion to the unique fixed
-  point — needed because star contraction can stabilize at multiple local
-  minima within one true component (friction/connected_components_reasoning.md:7-27);
-- ``connected_components``: the orchestrating driver loop (:507-557),
-  "alternating" (large★→small★ per round) or "two_phase" (large★ to fixpoint,
-  then one small★) — default two_phase matching the reference __main__ (:740).
+The loop, over the symmetrized edges ``sym`` (N(u) = u's neighbours):
 
-Differences from the reference are purely physical, never semantic:
+- initial label: ``label(u) = least(u, min N(u))``;
+- each round: ``label'(u) = min{label(v) : v ∈ N(u) ∪ {label(u)}}`` — one
+  union of ``sym`` with the pointer edges ``(u, label(u))``, one join, one
+  ``groupBy.min``.
 
-- neighborhood minima use ``groupBy(u).agg(min(v))`` + join-back instead of
-  ``collect_list`` + ``array_min`` (no giant per-node arrays at scale; min
-  gets map-side partial aggregation for free);
-- convergence checks are distributed anti-join counts
-  (edges.edge_sets_equal / pairs_equal) instead of the reference's
-  driver-side ``to_pydict()`` set comparison (:379-385) which collects the
-  full edge list;
-- every iteration output is checkpointed (localCheckpoint by default,
-  parquet round-trip when a checkpoint dir is configured) to sever lineage —
-  without this the plan depth grows per iteration and Catalyst analysis time
-  dominates (the reference severs via eager ``.collect()``).
+Why it is exact and fast: every label is a member of its node's component
+and ≤ the node, so ``label(label(u)) ≤ label(u)`` and labels never
+increase. An unchanged Σlabel therefore means no label moved — an exact
+fixed-point test with no join. At the fixed point each label equals every
+neighbour's label, so it is the component minimum. The pointer edge lets a
+label jump along the chain of labels as well as across one edge, so a label's
+reach roughly doubles each round: a path of diameter d needs O(log d) rounds
+where plain min-label diffusion needs d. This one loop replaces the
+reference's large-star/small-star contraction plus its global-min label
+propagation pass (friction/connected_components_reasoning.md), which exists
+only because star contraction can stall at local minima.
+
+Physical choices: every round's labels pass through ``checkpoint`` to sever
+lineage (localCheckpoint by default, parquet round-trip when a checkpoint
+dir is configured) — without it the plan depth grows per round and Catalyst
+analysis time dominates. A run that has not converged after ``max_loops``
+rounds raises instead of returning partial labels.
 """
 
 from __future__ import annotations
@@ -36,175 +41,48 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
+from daft_minhash_dedupe_spark.operators.edges import symmetrize
 
-from daft_minhash_dedupe_spark.operators.edges import (
-    edge_sets_equal,
-    symmetrize,
-)
+logger = logging.getLogger(__name__)
 
 Checkpoint = Callable[[DataFrame, str], DataFrame]
 
 
 def _local_checkpoint(df: DataFrame, _name: str) -> DataFrame:
-    # lazy: the convergence-signature aggregation that immediately follows is
-    # the action that materializes (and caches) the checkpoint — one job
-    # instead of two per iteration
+    # lazy: the Σlabel aggregation that immediately follows is the action
+    # that materializes (and caches) the checkpoint — one job instead of two
+    # per round
     return df.localCheckpoint(eager=False)
 
 
-def _edge_signature(edges: DataFrame) -> tuple:
-    """(row_count, Σ xxhash64(u,v) as exact decimal) in ONE aggregation job —
-    map-side partial agg, no shuffle of the edge set, no join. Used as a fast
-    probabilistic set-equality signal; equality is CONFIRMED with the exact
-    anti-join check before the loop exits (so correctness never rests on the
-    hash)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
-
-
 def _labels_sum(labels: DataFrame):
-    """Σ label as exact decimal, one aggregation job. Min-label propagation is
-    monotone non-increasing, so an unchanged sum ⟺ a fixed point — an EXACT
-    convergence test with no join and no second pass."""
+    """Σ label as exact decimal, one aggregation job. Labels are monotone
+    non-increasing, so an unchanged sum ⟺ a fixed point."""
     return labels.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).first()["s"]
-
-
-def _neighborhood_min(edges: DataFrame) -> DataFrame:
-    """(u, m) where m = min(neighbors(u) ∪ {u}); null-safe via F.least
-    (reference's if_else idiom :296-304)."""
-    return (
-        edges.groupBy("u")
-        .agg(F.min("v").alias("_mn"))
-        .select("u", F.least("_mn", "u").alias("m"))
-    )
-
-
-def large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor to the neighborhood min
-    (reference :279-316): symmetrize → m(u) → emit (v, m(u)) for v > u."""
-    sym = symmetrize(edges)
-    m = _neighborhood_min(sym)
-    return (
-        sym.join(m, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round (reference :318-358). NOTE: despite the reference's
-    comment ("group by larger"), its struct-if_else canonicalizes each edge to
-    (u=min, v=max) — the group key is the SMALLER endpoint; m = min(nbrs∪{u})
-    = u, and every larger neighbor is emitted attached to it. We mirror the
-    code, not the comment, via least/greatest."""
-    directed = (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    m = _neighborhood_min(directed)
-    return (
-        directed.join(m, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def construct_assignments(edges: DataFrame) -> DataFrame:
-    """(u, rep) for every node in the edge list; isolated → self
-    (reference :388-421)."""
-    nodes = (
-        edges.select("u")
-        .unionByName(edges.select(F.col("v").alias("u")))
-        .distinct()
-    )
-    rep_map = edges.groupBy("u").agg(F.min("v").alias("rep"))
-    return (
-        nodes.join(rep_map, "u", "left")
-        .select("u", F.coalesce("rep", "u").alias("rep"))
-        .distinct()
-    )
-
-
-def pairs_equal(a: DataFrame, b: DataFrame) -> bool:
-    """(u, rep) pair-set equality via distributed anti-joins, both directions
-    unioned into ONE job (reference :423-427 runs two driver round-trips)."""
-    diff = (
-        a.join(b, ["u", "rep"], "left_anti")
-        .unionByName(b.join(a, ["u", "rep"], "left_anti"))
-        .limit(1)
-    )
-    return diff.count() == 0
-
-
-def global_min_label_propagation(
-    edges: DataFrame,
-    assignments: DataFrame,
-    max_iters: int = 100,
-    checkpoint: Checkpoint = _local_checkpoint,
-) -> DataFrame:
-    """Diffuse the global minimum label over the undirected graph to a unique
-    fixed point (reference :429-505). Per-iteration: one join + one min-agg +
-    one join; labels checkpointed each round to sever lineage."""
-    sym = checkpoint(symmetrize(edges), "lp_edges")
-    labels = checkpoint(
-        assignments.select("u", F.col("rep").alias("label")), "lp_labels_0"
-    )
-    prev_sum = _labels_sum(labels)
-    for i in range(max_iters):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("u").alias("v"), F.col("label").alias("_nl")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("_nl").alias("nbr_min"))
-        )
-        labels_next = (
-            labels.join(nbr_min, "u", "left")
-            .select("u", F.least("label", "nbr_min").alias("label"))
-            .distinct()
-        )
-        labels_next = checkpoint(labels_next, f"lp_labels_{i + 1}")
-        next_sum = _labels_sum(labels_next)  # materializes the checkpoint too
-        labels = labels_next
-        if next_sum == prev_sum:
-            break
-        prev_sum = next_sum
-    return labels.select("u", F.col("label").alias("rep"))
 
 
 def connected_components(
     edges: DataFrame,
-    algorithm: str = "two_phase",
+    algorithm: str = "hash_to_min",
     max_loops: int = 100,
     checkpoint: Checkpoint = _local_checkpoint,
     driver_fallback_edges: int | None = None,
 ) -> DataFrame:
-    """Full CC: star contraction to stability, then assignments, then global
-    min-label propagation for exact global-minimum parity (reference :507-557).
+    """(u, rep) for every node in ``edges``; rep = its component's minimum id.
 
-    Returns (u, rep) with rep = the global minimum node id of u's component —
-    the invariant every downstream keep-rule depends on.
+    ``algorithm`` accepts only ``"hash_to_min"`` (the one loop above); any
+    other value raises ``ValueError``. Raises ``RuntimeError`` when the labels
+    still change after ``max_loops`` rounds.
 
     ``driver_fallback_edges``: scale-adaptive execution (the AQE-broadcast
     analogue for the iterative CC loop): when the edge set fits under this
     bound, a bounded ``limit(N+1).collect()`` + driver union-find replaces
-    the multi-job distributed loop — identical output (one row per node
-    appearing in edges, rep = component minimum, self rows included), tested
-    for DataFrame equality against the distributed path. ~1.5 s of driver
-    round-trips saved per tiny run; big edge sets take the distributed loop
-    untouched.
+    the multi-job distributed loop — identical output, tested for DataFrame
+    equality against the distributed path. Big edge sets take the
+    distributed loop untouched.
     """
+    if algorithm != "hash_to_min":
+        raise ValueError(f"unknown algorithm: {algorithm!r} (only 'hash_to_min')")
     if driver_fallback_edges:
         head = edges.select("u", "v").limit(driver_fallback_edges + 1).collect()
         if len(head) <= driver_fallback_edges:
@@ -213,65 +91,30 @@ def connected_components(
             return spark.createDataFrame(
                 sorted(mapping.items()) or [], "u long, rep long"
             )
-    if algorithm == "hash_to_min":
-        # no star contraction: initialize label(u) = min(u, min-neighbor) and
-        # diffuse. construct_assignments alone seeds rep = min OUTGOING
-        # neighbor, which on raw (bucket-min → member) edges can EXCEED u —
-        # star contraction normally reorients edges so that can't happen; the
-        # least(u, rep) init restores correctness for arbitrary edge sets.
-        # Fastest option on low-diameter LSH graphs (~2× vs alternating);
-        # star algorithms remain the safe choice for high-diameter graphs.
-        init = construct_assignments(edges).select(
-            "u", F.least("u", "rep").alias("rep")
+
+    sym = checkpoint(symmetrize(edges), "lp_edges")
+    labels = checkpoint(
+        sym.groupBy("u")
+        .agg(F.min("v").alias("_mn"))
+        .select("u", F.least("u", "_mn").alias("label")),
+        "lp_labels_0",
+    )
+    prev_sum = _labels_sum(labels)
+    for i in range(1, max_loops + 1):
+        candidates = sym.unionByName(labels.select("u", F.col("label").alias("v")))
+        labels = checkpoint(
+            candidates.join(labels.withColumnRenamed("u", "v"), "v")
+            .groupBy("u")
+            .agg(F.min("label").alias("label")),
+            f"lp_labels_{i}",
         )
-        return global_min_label_propagation(
-            edges, init, max_iters=max_loops, checkpoint=checkpoint
-        )
-
-    b = checkpoint(edges, "cc_edges_0")
-    sig_b = _edge_signature(b)
-
-    def _stable(prev_sig: tuple, prev_df: DataFrame, next_df: DataFrame) -> tuple:
-        """(converged?, next_sig): cheap one-job signature compare; only when
-        the signature matches run the exact anti-join confirmation."""
-        next_sig = _edge_signature(next_df)
-        if next_sig != prev_sig:
-            return False, next_sig
-        return edge_sets_equal(prev_df, next_df), next_sig
-
-    if algorithm == "alternating":
-        for i in range(max_loops):
-            a = large_star(b)
-            b_next = checkpoint(small_star(a), f"cc_edges_{i + 1}")
-            converged, sig_b = _stable(sig_b, b, b_next)
-            logger.debug("cc alternating round %d: edges=%s", i, sig_b[0])
-            b = b_next
-            if converged:
-                logger.info("cc alternating converged after %d rounds", i + 1)
-                break
-    elif algorithm == "two_phase":
-        for i in range(max_loops):
-            L, sig_l = b, sig_b
-            for j in range(max_loops):
-                L_next = checkpoint(large_star(L), f"cc_large_{i}_{j}")
-                converged, sig_l = _stable(sig_l, L, L_next)
-                logger.debug("cc two_phase round %d large-star %d: edges=%s", i, j, sig_l[0])
-                L = L_next
-                if converged:
-                    break
-            b_next = checkpoint(small_star(L), f"cc_edges_{i + 1}")
-            converged, sig_b = _stable(sig_b, b, b_next)
-            logger.debug("cc two_phase round %d: edges=%s", i, sig_b[0])
-            b = b_next
-            if converged:
-                logger.info("cc two_phase converged after %d rounds", i + 1)
-                break
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-
-    assignments = construct_assignments(b)
-    return global_min_label_propagation(
-        b, assignments, max_iters=max_loops, checkpoint=checkpoint
+        next_sum = _labels_sum(labels)  # materializes the checkpoint too
+        if next_sum == prev_sum:
+            logger.info("cc converged after %d rounds", i)
+            return labels.select("u", F.col("label").alias("rep"))
+        prev_sum = next_sum
+    raise RuntimeError(
+        f"connected components did not converge within max_loops={max_loops} rounds"
     )
 
 

@@ -92,32 +92,3 @@ def symmetrize(edges: DataFrame) -> DataFrame:
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
 
-
-def canonicalize(edges: DataFrame) -> DataFrame:
-    """Order each edge u < v and dedupe (reference :360-368) via least/greatest."""
-    return (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def edge_sets_equal(a: DataFrame, b: DataFrame) -> bool:
-    """Distributed canonical-edge-set equality.
-
-    The reference collects both edge lists to the driver and compares Python
-    sets (workload/minhash_dedupe.py:379-385) — a driver OOM at scale. Its own
-    friction log contains the better variant (friction/connected_components.py:88-93):
-    two anti-join counts, fully distributed. That is what we ship.
-    """
-    ca, cb = canonicalize(a), canonicalize(b)
-    diff = (
-        ca.join(cb, ["u", "v"], "left_anti")
-        .unionByName(cb.join(ca, ["u", "v"], "left_anti"))
-        .limit(1)
-    )
-    # single Spark job for both directions (driver-loop latency dominates CC
-    # wall time on converged graphs)
-    return diff.count() == 0

@@ -93,7 +93,7 @@ def incremental_assignments(
     # materialize the combined edges through a REAL storage boundary before
     # CC: the two branches share the new_bands lineage, and Spark 4.1's
     # Union self-reference deduplication leaves constraints referencing
-    # pre-dedup attribute ids — the CC star steps then crash inside
+    # pre-dedup attribute ids — CC plans over them then crash inside
     # Union.rewriteConstraints ("key not found: v#…"). Neither cache() nor
     # localCheckpoint() breaks the constraint linkage; a parquet round-trip
     # does (and is the same boundary the full pipeline places here anyway).

@@ -32,7 +32,6 @@ def parse_args():
     p.add_argument("--ngram", type=int, default=5)
     p.add_argument("--threshold", type=float, default=0.7)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--algorithm", default="two_phase", choices=["two_phase", "alternating"])
     p.add_argument(
         "--minhash-kernel",
         default="arrow",
@@ -173,7 +172,6 @@ def run_incremental(spark, args, df, cfg) -> None:
         new_bands.select("band_key", "node"),
         prior_bands,
         prior_assigns,
-        algorithm="hash_to_min" if cfg.algorithm == "hash_to_min" else cfg.algorithm,
         edges_checkpoint_dir=f"{args.output}/_work",
     )
     # the batch's cluster rows need only this batch's labels + re-labels
@@ -225,7 +223,6 @@ def run_tiered(spark, args, df, cfg, t0) -> None:
             "ngram_size": cfg.ngram_size,
             "threshold": cfg.threshold,
             "seed": cfg.seed,
-            "algorithm": cfg.algorithm,
         },
     )
     # note: when "exact" is excluded the cascade still runs its exact tiers —
@@ -267,7 +264,6 @@ def main() -> None:
         ngram_size=args.ngram,
         threshold=args.threshold,
         seed=args.seed,
-        algorithm=args.algorithm,
         verify_pairs=args.verify_pairs,
         checkpoint_dir=args.checkpoint,
         minhash_kernel=args.minhash_kernel,

@@ -12,8 +12,6 @@ from daft_minhash_dedupe_spark.operators.banding import (
 from daft_minhash_dedupe_spark.operators.edges import (
     build_edges,
     build_edges_from_buckets,
-    canonicalize,
-    edge_sets_equal,
     symmetrize,
 )
 
@@ -116,18 +114,7 @@ def test_singleton_buckets_produce_no_edges(spark):
     assert build_edges(grouped).count() == 0
 
 
-def test_symmetrize_and_canonicalize(spark):
+def test_symmetrize(spark):
     e = spark.createDataFrame([(1, 2), (3, 2)], "u long, v long")
     sym = {(r["u"], r["v"]) for r in symmetrize(e).collect()}
     assert sym == {(1, 2), (2, 1), (3, 2), (2, 3)}
-    canon = {(r["u"], r["v"]) for r in canonicalize(symmetrize(e)).collect()}
-    assert canon == {(1, 2), (2, 3)}
-
-
-def test_edge_sets_equal(spark):
-    a = spark.createDataFrame([(1, 2), (3, 4)], "u long, v long")
-    b = spark.createDataFrame([(2, 1), (4, 3)], "u long, v long")  # same canonical
-    c = spark.createDataFrame([(1, 2)], "u long, v long")
-    assert edge_sets_equal(a, b)
-    assert not edge_sets_equal(a, c)
-    assert not edge_sets_equal(c, a)

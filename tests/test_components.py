@@ -3,15 +3,10 @@
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
+from daft_minhash_dedupe_spark.config import DedupeConfig
 from daft_minhash_dedupe_spark.operators.components import (
     connected_components,
-    construct_assignments,
-    global_min_label_propagation,
-    large_star,
-    pairs_equal,
-    small_star,
     union_find_components,
 )
 from daft_minhash_dedupe_spark.oracle import partition_sets
@@ -25,28 +20,6 @@ def _assign(df):
     return {r["u"]: r["rep"] for r in df.collect()}
 
 
-def test_large_star_invariants(spark):
-    e = _edges(spark, [(1, 2), (2, 3), (4, 5)])
-    out = large_star(e).collect()
-    assert all(r["u"] != r["v"] for r in out)
-    # every emitted target label is ≤ source (min-attachment)
-    assert all(r["v"] < r["u"] for r in out)
-
-
-def test_small_star_invariants(spark):
-    e = _edges(spark, [(1, 2), (2, 3), (4, 5)])
-    out = small_star(e).collect()
-    assert all(r["u"] != r["v"] for r in out)
-
-
-def test_construct_assignments_isolated_self(spark):
-    e = _edges(spark, [(1, 2), (1, 3)])
-    got = _assign(construct_assignments(e))
-    # reference :388-421 is directional: u-side nodes get min(v) as rep,
-    # v-only nodes self-assign (label propagation fixes parity afterwards)
-    assert got == {1: 2, 2: 2, 3: 3}
-
-
 def test_empty_edges_converges(spark):
     # reference pin (tests:355-360): no edges → no assignments
     e = _edges(spark, [])
@@ -54,41 +27,53 @@ def test_empty_edges_converges(spark):
     assert assigns.count() == 0
 
 
-@pytest.mark.parametrize("algorithm", ["alternating", "two_phase", "hash_to_min"])
-def test_cc_known_graph(spark, algorithm):
+def test_cc_known_graph(spark):
     # reference pin (tests:342-353): components [[1,2,3,4],[5,6],[7 isolated]]
     e = _edges(spark, [(1, 2), (2, 3), (3, 4), (5, 6)])
-    got = _assign(connected_components(e, algorithm=algorithm))
+    got = _assign(connected_components(e))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5}
 
 
-@pytest.mark.parametrize("algorithm", ["alternating", "two_phase", "hash_to_min"])
-def test_cc_chain_reaches_global_min(spark, algorithm):
-    # long chain is the classic star-contraction stress (local-minima risk)
+def test_cc_chain_reaches_global_min(spark):
+    # long chain: the classic label-diffusion stress
     chain = [(i, i + 1) for i in range(1, 30)]
-    got = _assign(connected_components(_edges(spark, chain), algorithm=algorithm))
+    got = _assign(connected_components(_edges(spark, chain)))
     assert all(rep == 1 for rep in got.values())
     assert set(got) == set(range(1, 31))
+
+
+def test_cc_reversed_chain_reaches_global_min(spark):
+    # every edge points from the larger id to the smaller one, and the chain
+    # is three times longer than the default max_loops: per-hop diffusion
+    # would run out of rounds, pointer jumping needs O(log 300)
+    chain = [(i + 1, i) for i in reversed(range(300))]
+    got = _assign(connected_components(_edges(spark, chain)))
+    assert got == {i: 0 for i in range(301)}
 
 
 def test_label_propagation_drives_to_global_min(spark):
     # reference pin (tests:371-376)
     e = _edges(spark, [(1, 2), (2, 3), (3, 4)])
-    init = spark.createDataFrame([(1, 1), (2, 2), (3, 3), (4, 4)], "u long, rep long")
-    got = _assign(global_min_label_propagation(e, init))
+    got = _assign(connected_components(e))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
-def test_pairs_equal(spark):
-    a = spark.createDataFrame([(1, 1), (2, 1)], "u long, rep long")
-    b = spark.createDataFrame([(2, 1), (1, 1)], "u long, rep long")
-    c = spark.createDataFrame([(1, 1)], "u long, rep long")
-    assert pairs_equal(a, b)
-    assert not pairs_equal(a, c)
+def test_cc_raises_when_not_converged(spark):
+    chain = [(i, i + 1) for i in range(63)]
+    with pytest.raises(RuntimeError, match="max_loops=2"):
+        connected_components(_edges(spark, chain), max_loops=2)
 
 
-@pytest.mark.parametrize("algorithm", ["alternating", "two_phase", "hash_to_min"])
-def test_cc_random_graphs_match_union_find_oracle(spark, algorithm):
+def test_cc_rejects_unknown_algorithm(spark):
+    e = _edges(spark, [(1, 2)])
+    for algorithm in ("two_phase", "alternating"):
+        with pytest.raises(ValueError, match="algorithm"):
+            connected_components(e, algorithm=algorithm)
+        with pytest.raises(ValueError, match="algorithm"):
+            DedupeConfig(algorithm=algorithm)
+
+
+def test_cc_random_graphs_match_union_find_oracle(spark):
     rng = random.Random(42)
     for trial in range(3):
         n = 60
@@ -97,7 +82,7 @@ def test_cc_random_graphs_match_union_find_oracle(spark, algorithm):
             for _ in range(rng.randrange(10, 80))
         ]
         edges = [(u, v) for u, v in edges if u != v]
-        got = _assign(connected_components(_edges(spark, edges), algorithm=algorithm))
+        got = _assign(connected_components(_edges(spark, edges)))
         want = union_find_components(edges)
         assert partition_sets(got) == partition_sets(want), f"trial {trial}"
         # representative is the global min of each component
@@ -107,10 +92,6 @@ def test_cc_random_graphs_match_union_find_oracle(spark, algorithm):
 def test_driver_fallback_identical_to_distributed(spark):
     """The scale-adaptive union-find fallback must return EXACTLY the
     distributed result (same node set incl. self rows, same min reps)."""
-    import random
-
-    from daft_minhash_dedupe_spark.operators.components import connected_components
-
     rng = random.Random(7)
     nodes = [rng.randint(-(2**40), 2**40) for _ in range(300)]
     edges = [
@@ -118,24 +99,17 @@ def test_driver_fallback_identical_to_distributed(spark):
         for _ in range(400)
     ]
     df = spark.createDataFrame(edges, "u long, v long")
-    dist = {
-        (r["u"], r["rep"])
-        for r in connected_components(df, algorithm="hash_to_min").collect()
-    }
+    dist = {(r["u"], r["rep"]) for r in connected_components(df).collect()}
     fast = {
         (r["u"], r["rep"])
-        for r in connected_components(
-            df, algorithm="hash_to_min", driver_fallback_edges=10_000
-        ).collect()
+        for r in connected_components(df, driver_fallback_edges=10_000).collect()
     }
     assert fast == dist
     # over-threshold edge sets must keep taking the distributed path
     # (fallback bound smaller than the edge count -> same distributed result)
     still_dist = {
         (r["u"], r["rep"])
-        for r in connected_components(
-            df, algorithm="hash_to_min", driver_fallback_edges=10
-        ).collect()
+        for r in connected_components(df, driver_fallback_edges=10).collect()
     }
     assert still_dist == dist
 
@@ -146,7 +120,7 @@ def test_driver_fallback_identical_to_distributed(spark):
 def test_cc_star_chain_converges_with_max_loops_margin(spark):
     """Star-chained worst case (bench --cc-stress at 25x smaller scale):
     one component of 40k nodes whose 200-hub chain gives diameter ~200.
-    Star contraction must converge in O(log diameter) rounds — assert a
+    The default loop must converge in O(log diameter) rounds — assert a
     4x margin under the default max_loops=100 budget, and exact
     correctness (single component labeled by the global min)."""
     import sys
@@ -155,19 +129,13 @@ def test_cc_star_chain_converges_with_max_loops_margin(spark):
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from bench import RoundCounter, cc_stress_edges
 
-    from daft_minhash_dedupe_spark.operators.components import connected_components
-
     edges = cc_stress_edges(spark, 40_000, 200).localCheckpoint(eager=True)
     counter = RoundCounter()
-    assigns = connected_components(
-        edges, algorithm="two_phase", max_loops=100, checkpoint=counter
-    )
+    assigns = connected_components(edges, max_loops=100, checkpoint=counter)
     rows = assigns.collect()
     assert len(rows) == 40_000
     assert {r["rep"] for r in rows} == {0}
     rounds = counter.rounds()
-    # log2(200) ~ 8; anything near max_loops means contraction degraded to
+    # log2(200) ~ 8; anything near max_loops means the loop degraded to
     # per-hop diffusion and a 10^6-hub chain would blow the budget
-    assert rounds["small_star_rounds"] <= 25, rounds
-    assert rounds["large_star_steps"] <= 50, rounds
     assert rounds["label_prop_iters"] <= 25, rounds
