@@ -176,7 +176,6 @@ def _verified_from_shared_stages(spark: SparkSession, sf_dir: str) -> dict:
     ).localCheckpoint(eager=False)
     assignments = connected_components(
         edges,
-        algorithm=cfg.algorithm,
         max_loops=cfg.max_loops,
         driver_fallback_edges=cfg.cc_driver_fallback_edges,
     )

@@ -382,8 +382,8 @@ def cc_stress_edges(spark, n_nodes: int, star_size: int):
     """Star-chained single component: n_nodes/star_size stars (leaf→hub
     edges) whose hubs form one long chain — a ~10^6-node component whose
     hub-chain diameter (~n_nodes/star_size) is the worst shape for
-    label-diffusion CC. The CC loop must still converge in O(log
-    diameter) rounds or a real 100-TB boilerplate cluster (every page
+    label-diffusion CC. The CC loop must still converge in a few dozen
+    rounds at most or a real 100-TB boilerplate cluster (every page
     sharing one template) would never finish."""
     from pyspark.sql import functions as F
 

@@ -88,7 +88,7 @@ class DedupeConfig:
     white_space: bool = True
     # Connected components: the only accepted value is "hash_to_min", the
     # one loop in operators/components.py — min-label propagation with
-    # pointer jumping, O(log diameter) rounds. It replaces the reference's
+    # parent-connect and pointer jumping. It replaces the reference's
     # star-contraction variants (workload/minhash_dedupe.py:149, :740).
     algorithm: str = "hash_to_min"
     max_loops: int = 100

@@ -55,7 +55,12 @@ def incremental_assignments(
     old_updates: (u, rep) re-labels for old nodes whose cluster got merged
                  (bridged by a new document) — apply with a left join +
                  coalesce over the stored assignment table.
+
+    ``algorithm`` accepts only ``"hash_to_min"`` (DedupeConfig.algorithm's
+    one value); any other value raises ``ValueError``.
     """
+    if algorithm != "hash_to_min":
+        raise ValueError(f"algorithm must be 'hash_to_min' (got {algorithm!r})")
     # cache (NOT localCheckpoint): the band table feeds several branches that
     # later self-union; localCheckpoint's LogicalRDD carries originConstraints
     # with the original attribute ids, and Spark's self-union deduplication
@@ -112,9 +117,7 @@ def incremental_assignments(
     path = f"{edges_checkpoint_dir}/incremental_edges"
     nn_edges.unionByName(no_edges).write.mode("overwrite").parquet(path)
     edges = new_bands.sparkSession.read.parquet(path)
-    assigns = connected_components(
-        edges, algorithm=algorithm, driver_fallback_edges=driver_fallback_edges
-    )
+    assigns = connected_components(edges, driver_fallback_edges=driver_fallback_edges)
 
     # split the result: labels for new nodes vs merged-old-rep re-labels
     old_reps = old_assignments.select(F.col("rep").alias("u")).distinct()

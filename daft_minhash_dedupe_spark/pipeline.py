@@ -241,7 +241,6 @@ class MinHashDedupePipeline:
             "components",
             connected_components(
                 edges,
-                algorithm=c.algorithm,
                 max_loops=c.max_loops,
                 checkpoint=ck.iter_checkpoint,
                 driver_fallback_edges=c.cc_driver_fallback_edges,

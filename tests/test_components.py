@@ -4,11 +4,13 @@ import random
 
 import pytest
 
+from bench import RoundCounter, cc_stress_edges
 from daft_minhash_dedupe_spark.config import DedupeConfig
 from daft_minhash_dedupe_spark.operators.components import (
     connected_components,
     union_find_components,
 )
+from daft_minhash_dedupe_spark.operators.incremental import incremental_assignments
 from daft_minhash_dedupe_spark.oracle import partition_sets
 
 
@@ -45,10 +47,38 @@ def test_cc_chain_reaches_global_min(spark):
 def test_cc_reversed_chain_reaches_global_min(spark):
     # every edge points from the larger id to the smaller one, and the chain
     # is three times longer than the default max_loops: per-hop diffusion
-    # would run out of rounds, pointer jumping needs O(log 300)
+    # would run out of rounds, pointer jumping needs about log2(300)
     chain = [(i + 1, i) for i in reversed(range(300))]
     got = _assign(connected_components(_edges(spark, chain)))
     assert got == {i: 0 for i in range(301)}
+
+
+def _random_id_path(n, seed):
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+@pytest.mark.parametrize(
+    "path",
+    [
+        # 0-200-199-...-2-1: nodes 1..200 settle on the local minimum 1 at
+        # the far end, so every pointer leads to 1. Pull plus pointer
+        # jumping alone then moves 0 one hop per round (~200 rounds);
+        # parent-connect hands it to node 1 as soon as a node pointing
+        # there sees it.
+        [(0, 200)] + [(i, i - 1) for i in range(200, 1, -1)],
+        # a path whose ids are a random permutation: local minima everywhere
+        _random_id_path(1000, seed=3),
+    ],
+    ids=["far_local_min", "random_ids"],
+)
+def test_cc_path_with_local_minima(spark, path):
+    n = len(path) + 1
+    counter = RoundCounter()
+    got = _assign(connected_components(_edges(spark, path), checkpoint=counter))
+    assert got == {i: 0 for i in range(n)}
+    assert counter.rounds()["label_prop_iters"] <= 25, counter.rounds()
 
 
 def test_label_propagation_drives_to_global_min(spark):
@@ -65,12 +95,12 @@ def test_cc_raises_when_not_converged(spark):
 
 
 def test_cc_rejects_unknown_algorithm(spark):
-    e = _edges(spark, [(1, 2)])
+    e = spark.createDataFrame([], "band_key long, node long")
     for algorithm in ("two_phase", "alternating"):
         with pytest.raises(ValueError, match="algorithm"):
-            connected_components(e, algorithm=algorithm)
-        with pytest.raises(ValueError, match="algorithm"):
             DedupeConfig(algorithm=algorithm)
+        with pytest.raises(ValueError, match="algorithm"):
+            incremental_assignments(e, e, e, algorithm=algorithm)
 
 
 def test_cc_random_graphs_match_union_find_oracle(spark):
@@ -120,17 +150,11 @@ def test_driver_fallback_identical_to_distributed(spark):
 def test_cc_star_chain_converges_with_max_loops_margin(spark):
     """Star-chained worst case (bench --cc-stress at 25x smaller scale):
     one component of 40k nodes whose 200-hub chain gives diameter ~200.
-    The default loop must converge in O(log diameter) rounds — assert a
-    4x margin under the default max_loops=100 budget, and exact
+    The default loop must converge in about log2(diameter) rounds — assert
+    a 4x margin under the default max_loops=100 budget, and exact
     correctness (single component labeled by the global min)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from bench import RoundCounter, cc_stress_edges
-
-    edges = cc_stress_edges(spark, 40_000, 200).localCheckpoint(eager=True)
     counter = RoundCounter()
+    edges = cc_stress_edges(spark, 40_000, 200).localCheckpoint(eager=True)
     assigns = connected_components(edges, max_loops=100, checkpoint=counter)
     rows = assigns.collect()
     assert len(rows) == 40_000

@@ -25,7 +25,7 @@ def _stages(pipe, df):
     sigs = pipe.signatures(pipe.normalize(prepped))
     bands = pipe.bands(sigs).localCheckpoint(eager=False)
     edges = build_edges_from_buckets(bands)
-    assigns = connected_components(edges, algorithm="hash_to_min")
+    assigns = connected_components(edges)
     nodes = [r["node_id"] for r in prepped.select("node_id").distinct().collect()]
     return nodes, bands, assigns
 
